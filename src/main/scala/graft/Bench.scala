@@ -105,6 +105,29 @@ object Bench {
       t > prior * c * OutlierFactor || t < prior / OutlierFactor
     }
 
+  /** The `outlier_rule` the artifact reports: [[isOutlier]]'s band. */
+  private[graft] val OutlierRule: String =
+    s"requeue_once_above_${OutlierFactor}x_prior_calib_scaled_or_below_prior_over_$OutlierFactor"
+
+  /** Queries whose hot runs serve a build-once memo (IVF centroid
+    * model, cluster labeling, graph edge artifact, BPE merge table,
+    * published layout) rather than recomputing: hot numbers there are
+    * SERVE time, not compute time.
+    */
+  private[graft] val MemoizedHot: Seq[String] = Seq(
+    "sim_ivf", "sim_pq", "sim_ivfpq", "dedup_cluster",
+    "pipeline_prep", "graph_pagerank", "graph_triangles", "graph_jaccard",
+    "graph_bfs", "graph_components", "pipeline_holdout", "dedup_semantic",
+    "text_rank", "text_bpe", "text_bpe_encode", "sim_recall",
+    "pipeline_survivor", "text_fertility", "chunk_token_budget",
+    // shingle-postings index servers + the edge-artifact peelers
+    "dedup_ngram", "dedup_containment", "dedup_minhash",
+    "graph_kcore", "graph_ktruss",
+    // index servers: walk adjacency, HITS canonical edges + node set
+    "graph_walks", "graph_hits",
+    // publish-once bucketed tables
+    "layout_bucket")
+
   /** Where a run writes its artifacts (round 12, VERDICT r11 ask #1b).
     *
     * The merged cross-run prior BENCH_FULL.json has been clobbered by
@@ -450,20 +473,7 @@ object Bench {
     val coreSet = Set("doc_chunk_stats", "doc_chunks", "doc_chunks_overlap",
       "chunk_fixed", "chunk_multipage", "doc_stats_fixed", "doc_normalize",
       "multi_root", "doc_report", "sql_chunk_split")
-    // Queries whose hot runs serve a build-once memo (IVF centroid model,
-    // cluster labeling, graph edge artifact, BPE merge table) rather than
-    // recomputing: hot numbers there are SERVE time, not compute time.
-    val memoized = Seq("sim_ivf", "sim_pq", "sim_ivfpq", "dedup_cluster",
-      "pipeline_prep", "graph_pagerank", "graph_triangles", "graph_jaccard",
-      "graph_bfs", "graph_components", "pipeline_holdout", "dedup_semantic",
-      "text_rank", "text_bpe", "text_bpe_encode", "sim_recall",
-      "pipeline_survivor", "text_fertility", "chunk_token_budget",
-      // shingle-postings index servers + the edge-artifact peelers
-      "dedup_ngram", "dedup_containment", "dedup_minhash",
-      "graph_kcore", "graph_ktruss",
-      // round 16: converged-state servers (walk adjacency, HITS scores)
-      "graph_walks", "graph_hits")
-      .filter(fns.contains)
+    val memoized = MemoizedHot.filter(fns.contains)
 
     def strArr(xs: Seq[String]): String =
       xs.map(s => s""""$s"""").mkString("[", ",", "]")
@@ -500,7 +510,7 @@ object Bench {
         s""""build_s":${r3d(buildTimes.values.sum)},"build_queries":$builds,""" +
         s""""queries":$qs,"queries_hot":$qh,"hot_reps":$reps,""" +
         s""""hot_protocol":"min_of_reps","min_hot_reps":$minReps,""" +
-        s""""outlier_rule":"requeue_once_above_${OutlierFactor}x_prior_calib_scaled",""" +
+        s""""outlier_rule":"$OutlierRule",""" +
         s""""outliers_requeued":${strArr(outliersRequeued.toSeq)},""" +
         s""""prior_ref_entries":${priorCold.size},""" +
         s""""n_queries":${states.size},"n_completed":${doneSt.size},""" +

@@ -30,19 +30,23 @@ object Engine {
   /** Chunks with content retained (the vector-db ingestion shape). */
   def chunks(spark: SparkSession, root: String, opts: Options = Options()): Dataset[Chunk] =
     ChunkPipeline.chunk(
-      FileSources.pages(FileSources.binaryFiles(spark, root, opts.glob), opts.extractor),
-      opts.split)
+      FileSources.pages(spark, root, opts.glob, opts.extractor), opts.split)
 
-  /** Per-file statistics (pages, chunks, sizes, ratio). Pages are
+  /** Per-file statistics (pages, chunks, sizes, ratio, unmapped
+    * fonts): one narrow map over [[FileSources.scan]] that decodes each
+    * file once and aggregates it in the same task
+    * ([[ChunkPipeline.fileStatsOf]]), with no shuffle. Pages are
     * counted from the page source, not from chunks, so chunkless pages
     * and files are represented (reference semantics: `pages =
-    * len(documents)`, `pdf_reader.py:498`).
+    * len(documents)`, `pdf_reader.py:498`). Equal to the Catalyst
+    * chunk path ([[chunks]] → `chunkMetrics` → per-path count/sum).
     */
   def fileStats(spark: SparkSession, root: String, opts: Options = Options()): Dataset[FileStats] = {
-    val pages = FileSources.pages(
-      FileSources.binaryFiles(spark, root, opts.glob), opts.extractor)
-    ChunkPipeline.fileStats(pages,
-      ChunkPipeline.chunkMetrics(ChunkPipeline.chunk(pages, opts.split)))
+    import spark.implicits._
+    FileSources.scan(spark, root, opts.glob) { (path, length, bytes) =>
+      ChunkPipeline.fileStatsOf(
+        path, length, opts.extractor.extractDetailed(path, bytes), opts.split).iterator
+    }
   }
 
   /** Formatted report with the SUM TOTAL row last

@@ -5,27 +5,33 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.{Chunk, FileStats, Page}
+import graft.sources.ExtractedPage
 import graft.split.{RecursiveCharacterSplitter, SplitConfig}
 
 /** The reference's core dataflow, Spark-first (SURVEY.md §0):
   *
   * {{{
   * pages --flatMap splitter--> chunks --normalize/measure-->
-  *   window prefix-sum offsets --> per-file agg --> rollup report
+  *   window prefix-sum offsets --> per-file agg --> per-file ∪ total report
   * }}}
   *
   * Stage mapping to `/root/reference/pdf_reader.py`:
   *   - chunking `:446-453` -> typed `flatMap` (C1)
   *   - per-chunk normalize+measure `:459-477` -> codegen'd columns (C2)
   *   - running file offset `:483-485` -> window prefix-sum (C3)
-  *   - per-file aggregate `:487-503` -> `groupBy(path).agg` (A1)
-  *   - corpus totals + SUM TOTAL row `:130-164` -> `rollup` (A2/U1)
+  *   - per-file aggregate `:487-503` -> `groupBy(path).agg` (A1), or
+  *     [[fileStatsOf]] inside the task that read the file
+  *   - corpus totals + SUM TOTAL row `:130-164` -> [[statsWithTotal]]
+  *     (A2/U1)
   *
-  * Scale notes: the single shuffle is the hash-partition on `path` for
-  * the window; the subsequent `groupBy(path)` reuses that partitioning
-  * (no second exchange). Chunk `content` is dropped by Catalyst column
-  * pruning whenever downstream doesn't select it — the reference's
-  * manual `b_get_content=False` (`pdf_reader.py:406`) is unnecessary.
+  * Scale notes: the chunk path's one shuffle is the hash-partition on
+  * `path` for the window; the subsequent `groupBy(path)` reuses that
+  * partitioning (no second exchange). The file path (`Engine.fileStats`)
+  * needs no shuffle at all: a file never spans tasks, so
+  * [[fileStatsOf]] aggregates it where it was decoded. Chunk `content`
+  * is dropped by Catalyst column pruning whenever downstream doesn't
+  * select it — the reference's manual `b_get_content=False`
+  * (`pdf_reader.py:406`) is unnecessary.
   */
 object ChunkPipeline {
 
@@ -98,35 +104,46 @@ object ChunkPipeline {
         col("path"), col("pages"), col("chunks"),
         col("fileSize"), col("textSize"), col("ratio"),
         // chunk rows exist only for pages that yielded text, so font
-        // telemetry cannot flow through this overload — it is 0 by
-        // construction here (documents-table sources have no fonts);
-        // the page-aware overload below carries the real counts
+        // telemetry cannot flow through here — it is 0 by construction
+        // (documents-table sources have no fonts); [[fileStatsOf]]
+        // carries the real counts
         lit(0L).as("unmappedFonts"))
       .as[FileStats]
   }
 
-  /** A2 + U1: per-file rows plus the corpus-total row — expressed as a
-    * `rollup("path")` (one pass, partial aggregation map-side) with the
-    * grand-total row labeled `SUM TOTAL` and ordered last
-    * (`pdf_reader.py:154-164` append-last invariant). The total ratio
-    * is ratio-of-sums, NOT mean-of-ratios (`pdf_reader.py:148`).
+  /** A2 + U1: per-file rows sorted by path, then the corpus-total row
+    * labeled `SUM TOTAL` (`pdf_reader.py:154-164` append-last
+    * invariant). Per-file rows are unique by path, so the total is a
+    * running sum appended after the last row, not a rollup. One
+    * `repartition(1)` exchange puts the rows in a single partition, so
+    * the sort needs no range-sampling job, and an uncached `stats`
+    * still computes on all its tasks (a narrow `coalesce(1)` would
+    * pull it into one). The total ratio is ratio-of-sums, NOT
+    * mean-of-ratios (`pdf_reader.py:148`). An empty `stats` yields no
+    * rows.
     */
   def statsWithTotal(stats: Dataset[FileStats]): DataFrame = {
-    stats.toDF()
-      .rollup(col("path"))
-      .agg(
-        sum(col("pages")).as("pages"),
-        sum(col("chunks")).as("chunks"),
-        sum(col("fileSize")).as("file_size"),
-        sum(col("textSize")).as("text_size"),
-        sum(col("unmappedFonts")).as("unmapped_fonts"),
-        grouping(col("path")).as("is_total"))
+    import stats.sparkSession.implicits._
+    stats.repartition(1)
+      .sortWithinPartitions(col("path"))
+      .mapPartitions { rows =>
+        var total = Option.empty[FileStats]
+        rows.map { r =>
+          total = Some(total.fold(r.copy(path = "SUM TOTAL")) { t =>
+            t.copy(pages = t.pages + r.pages, chunks = t.chunks + r.chunks,
+              fileSize = t.fileSize + r.fileSize, textSize = t.textSize + r.textSize,
+              unmappedFonts = t.unmappedFonts + r.unmappedFonts)
+          })
+          r
+        } ++ total // by-name: read once the rows are exhausted
+      }
+      .select(
+        col("path"), col("pages"), col("chunks"),
+        col("fileSize").as("file_size"), col("textSize").as("text_size"),
+        col("unmappedFonts").as("unmapped_fonts"))
       .withColumn("ratio",
         when(col("text_size") === 0, lit(null).cast("double"))
           .otherwise(col("file_size").cast("double") / col("text_size")))
-      .withColumn("path", coalesce(col("path"), lit("SUM TOTAL")))
-      .orderBy(col("is_total"), col("path"))
-      .drop("is_total")
   }
 
   /** Report formatting (P8/P9): thousands-separated counts and
@@ -166,41 +183,46 @@ object ChunkPipeline {
   def writeJson(stats: Dataset[graft.FileStats], out: String): Unit =
     stats.coalesce(1).write.mode("overwrite").json(out)
 
-  /** A1 with page-truth: pages counted from the page source — the
+  /** A1 fused: one file's stats from its decoded pages, in the task
+    * that read it — the split → normalize → measure chain of
+    * [[chunk]] + [[chunkMetrics]] + [[fileStats]] without rows in
+    * between. Pages come from the page source, not from chunks — the
     * reference's `pages = len(documents)` (`pdf_reader.py:498,503`) —
     * so trailing pages that yield no chunks still count, and a file
     * whose pages yield no chunks at all (empty/whitespace text) gets a
     * row with `chunks = 0` and a null ratio (the documented deviation
-    * from the reference's ZeroDivisionError, SURVEY.md §7.4). The
-    * chunk-only overload above remains for sources where every page
-    * chunks (e.g. the documents table).
+    * from the reference's ZeroDivisionError, SURVEY.md §7.4). A file
+    * that yields no pages gets no row. Text size counts code points,
+    * as Spark's `length()` does.
     */
-  def fileStats(pages: Dataset[Page], chunkMetrics: DataFrame): Dataset[FileStats] = {
-    val spark = pages.sparkSession
-    import spark.implicits._
-    val pageStats = pages.toDF().groupBy(col("path"))
-      .agg(
-        (max(col("page")) + 1).cast("long").as("pages"),
-        max(col("fileSize")).as("fileSize"),
+  def fileStatsOf(
+      path: String,
+      fileSize: Long,
+      pages: Seq[ExtractedPage],
+      cfg: SplitConfig): Option[FileStats] =
+    if (pages.isEmpty) None
+    else {
+      var chunks = 0L
+      var textSize = 0L
+      pages.foreach { p =>
+        RecursiveCharacterSplitter.splitText(p.text, cfg).foreach { c =>
+          val n = Normalize.normalize(c)
+          chunks += 1
+          textSize += n.codePointCount(0, n.length)
+        }
+      }
+      Some(FileStats(path,
+        // pages are 0-based ordinals: max+1, as the chunk path counts
+        pages = pages.iterator.map(_.page).max + 1L,
+        chunks = chunks,
+        fileSize = fileSize,
+        textSize = textSize,
+        ratio = if (textSize == 0) None else Some(fileSize.toDouble / textSize),
         // distinct-per-page counts summed: one entry per (page, font
         // resource) whose text was dropped as opaque — the honest-
         // telemetry flag for silently-empty CJK extractions
-        sum(col("unmappedFonts")).as("unmappedFonts"))
-    val chunkAgg = chunkMetrics.groupBy(col("path"))
-      .agg(
-        count(lit(1)).as("chunks"),
-        sum(col("chunk_len")).as("textSize"))
-    pageStats.join(chunkAgg, Seq("path"), "left")
-      .na.fill(0L, Seq("chunks", "textSize"))
-      .withColumn("ratio",
-        when(col("textSize") === 0, lit(null).cast("double"))
-          .otherwise(col("fileSize").cast("double") / col("textSize")))
-      .select(
-        col("path"), col("pages"), col("chunks"),
-        col("fileSize"), col("textSize"), col("ratio"),
-        col("unmappedFonts"))
-      .as[FileStats]
-  }
+        unmappedFonts = pages.iterator.map(_.unmappedFonts).sum))
+    }
 
   /** End-to-end convenience: documents dir -> per-file stats + total. */
   def docChunkStats(

@@ -245,8 +245,7 @@ object PdfCorpus {
   /** Shared scan→extract→chunk→aggregate tail of both gate queries. */
   private def statsOver(
       spark: SparkSession, root: String, variantMod: Int): DataFrame = {
-    val files = FileSources.binaryFiles(spark, root, "*.pdf")
-    val pages = FileSources.pages(files, PdfTextExtractor)
+    val pages = FileSources.pages(spark, root, "*.pdf", PdfTextExtractor)
     val cm = ChunkPipeline.chunkMetrics(ChunkPipeline.chunk(pages, SplitConfig()))
     val perChunk = cm.groupBy(col("path")).agg(
       count(lit(1)).as("chunks"),

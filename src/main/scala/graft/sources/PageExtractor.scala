@@ -1,7 +1,16 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
+import java.net.URI
+
+import scala.collection.mutable
+import scala.reflect.ClassTag
+
+import org.apache.hadoop.fs.Path
+import org.apache.spark.SparkException
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.util.SerializableConfiguration
 
 import graft.Page
 
@@ -55,9 +64,8 @@ object FileSources {
   /** S1 + S2: recursive directory scan with extension filter pushed to
     * the listing (the reference's `os.walk` + lowercase-endswith,
     * `/root/reference/pdf_reader.py:327-359`), file size for free.
-    * `binaryFile` partitions the listing across tasks by size packing —
-    * the reference's LPT big-files-first heuristic (O1,
-    * `pdf_reader.py:361-388`) is subsumed by task scheduling.
+    * [[scan]] takes its listing from this relation's file index (glob,
+    * recursion, hidden-file and zero-byte rules), not its reader.
     */
   def binaryFiles(spark: SparkSession, root: String, glob: String = "*.txt"): DataFrame =
     spark.read.format("binaryFile")
@@ -65,22 +73,86 @@ object FileSources {
       .option("pathGlobFilter", glob)
       .load(root)
 
-  /** Files -> typed pages through a [[PageExtractor]] (typed flatMap:
-    * streams per-file, no driver materialization; a 10 GB file's pages
-    * iterate through the task, unlike the reference which holds the
-    * whole file's pages+chunks in worker memory, SURVEY.md §4).
+  /** O1: the reference's LPT heuristic (`pdf_reader.py:361-388`) —
+    * files largest first, each onto the currently lightest of
+    * `min(files, k)` bins. No bin ends heavier than total/k plus the
+    * heaviest single item. Ties break by key, then by bin index, so
+    * the packing is deterministic.
+    */
+  private[graft] def lptBins[T](items: Seq[T], k: Int)(
+      weight: T => Long, key: T => String): Seq[Seq[T]] = {
+    val n = math.min(items.size, k)
+    val bins = Array.fill(n)(Vector.newBuilder[T])
+    val lightest = mutable.PriorityQueue.empty[(Long, Int)](Ordering[(Long, Int)].reverse)
+    (0 until n).foreach(i => lightest.enqueue((0L, i)))
+    items.sortBy(t => (-weight(t), key(t))).foreach { t =>
+      val (load, i) = lightest.dequeue()
+      bins(i) += t
+      lightest.enqueue((load + weight(t), i))
+    }
+    bins.toSeq.map(_.result())
+  }
+
+  /** One listed file: the `path` string `binaryFile` emits and the URI
+    * it is opened by. */
+  private final case class Listed(path: String, uri: String, length: Long)
+
+  /** Files -> `f(path, length, bytes)` rows, one read per file on a
+    * size-balanced scan. The [[binaryFiles]] listing is LPT-packed
+    * ([[lptBins]]) onto `defaultParallelism` tasks, weighting each file
+    * by its length plus `spark.sql.files.openCostInBytes`; each task
+    * reads its own files through the session's Hadoop conf, broadcast
+    * once. (`binaryFile`'s own packing fills partitions largest file
+    * first up to `maxPartitionBytes`, which put every large file of a
+    * mixed tree into the first task.) A file never spans tasks, so `f`
+    * sees one whole file.
+    */
+  def scan[T: Encoder](spark: SparkSession, root: String, glob: String)(
+      f: (String, Long, Array[Byte]) => Iterator[T]): Dataset[T] = {
+    val conf = spark.sessionState.conf
+    val files = binaryFiles(spark, root, glob).queryExecution.analyzed.collect {
+      case l: LogicalRelation => l.relation
+    }.collect { case r: HadoopFsRelation =>
+      r.location.listFiles(Nil, Nil).flatMap(_.files)
+    }.flatten.map(s => Listed(s.getPath.toString, s.getPath.toUri.toString, s.getLen))
+    if (files.isEmpty) return spark.emptyDataset[T]
+    // binaryFile's read-time guard, same conf
+    val maxLength = conf.getConf(SQLConf.SOURCES_BINARY_FILE_MAX_LENGTH)
+    val maxKey = SQLConf.SOURCES_BINARY_FILE_MAX_LENGTH.key
+    val openCost = conf.filesOpenCostInBytes
+    val bins = lptBins(files, spark.sparkContext.defaultParallelism)(
+      _.length + openCost, _.path)
+    val hadoopConf = spark.sparkContext.broadcast(
+      new SerializableConfiguration(spark.sessionState.newHadoopConf()))
+    implicit val tag: ClassTag[T] = implicitly[Encoder[T]].clsTag
+    spark.createDataset(
+      spark.sparkContext.parallelize(bins, bins.size).flatMap { bin =>
+        bin.iterator.flatMap { l =>
+          if (l.length > maxLength) throw new SparkException(
+            s"${l.path} is ${l.length} bytes, over $maxKey = $maxLength")
+          val p = new Path(new URI(l.uri))
+          val in = p.getFileSystem(hadoopConf.value.value).open(p)
+          val bytes = try in.readAllBytes() finally in.close()
+          f(l.path, l.length, bytes)
+        }
+      })
+  }
+
+  /** Files -> typed pages through a [[PageExtractor]], on the [[scan]]
+    * (streams per file and collects nothing; a 10 GB file's
+    * pages iterate through the task, unlike the reference which holds
+    * the whole file's pages+chunks in worker memory, SURVEY.md §4).
     */
   def pages(
-      files: DataFrame,
+      spark: SparkSession,
+      root: String,
+      glob: String,
       extractor: PageExtractor = PlainTextExtractor): Dataset[Page] = {
-    val spark = files.sparkSession
     import spark.implicits._
-    files.select(col("path"), col("length"), col("content"))
-      .as[(String, Long, Array[Byte])]
-      .flatMap { case (path, length, content) =>
-        extractor.extractDetailed(path, content).map { p =>
-          Page(path, p.page, p.text, length, p.unmappedFonts)
-        }
+    scan(spark, root, glob) { (path, length, bytes) =>
+      extractor.extractDetailed(path, bytes).iterator.map { p =>
+        Page(path, p.page, p.text, length, p.unmappedFonts)
       }
+    }
   }
 }

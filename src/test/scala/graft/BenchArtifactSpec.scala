@@ -78,6 +78,13 @@ class BenchArtifactSpec extends AnyFunSuite {
     assert(!Bench.isOutlier(t = 99.0, prior = -1.0, calibRatio = 1.0))
   }
 
+  test("artifact metadata names the symmetric outlier band and every memo server") {
+    assert(Bench.OutlierRule ==
+      "requeue_once_above_1.5x_prior_calib_scaled_or_below_prior_over_1.5")
+    assert(Bench.MemoizedHot.contains("layout_bucket"))
+    assert(Bench.MemoizedHot.distinct.size == Bench.MemoizedHot.size)
+  }
+
   // Round 13, VERDICT r12 #3: the merged prior must carry HONEST
   // provenance — best-of calib_s, degraded only when every source was
   // degraded, and a merged_from list. The rule lives in
